@@ -2,52 +2,42 @@
 
 Rebuild of the reference's Delta (reference: Delta.scala:40-50): list
 both trees, strip prefixes, set-difference on (relative path, size) in
-both directions. This is the reference's one truly relational operator
-— expressed here as DataFrame anti-joins, which is exactly how it
-scales: at 100 TB the two listings are themselves large datasets, and
-an anti-join shuffles on (rel_path, byte_size) instead of building
-driver-side sets.
+both directions. ``list_tree`` already returns each listing as a
+Python list on the driver, so the difference is two set operations
+there too — as in the reference — and launches no Spark job. Only the
+byte copy of ``synchronize`` goes to the cluster.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from octopufs_spark.fs.core import get_filesystem, list_tree
 from octopufs_spark.fs.distributed import copy_files
 from octopufs_spark.fs.local import delete_paths
-from octopufs_spark.fs.model import Paths, inventory_df
+from octopufs_spark.fs.model import Paths
 
 log = logging.getLogger(__name__)
 
 
-def _rel_inventory(spark: SparkSession, uri: str) -> DataFrame:
-    """Inventory DataFrame with prefix-stripped relative paths (files only)."""
-    from octopufs_spark.fs.model import FsElement
-
+def _rel_inventory(uri: str) -> set[tuple[str, int]]:
+    """(relative path, byte size) of every file under ``uri``."""
     _, root = get_filesystem(uri)
-    elements = [
-        FsElement(e.path[len(root) + 1 :], False, e.byte_size)
-        for e in list_tree(uri)
-        if not e.is_dir
-    ]
-    df = inventory_df(spark, elements)
-    return df.select(F.col("path").alias("rel_path"), F.col("byte_size"))
+    return {(e.path[len(root) + 1 :], e.byte_size) for e in list_tree(uri) if not e.is_dir}
 
 
 def get_delta(
     spark: SparkSession, src_uri: str, trg_uri: str
 ) -> tuple[list[str], list[str]]:
-    """(missing_in_target, only_in_target) as relative paths
-    (reference: getDelta, Delta.scala:40-50)."""
-    src = _rel_inventory(spark, src_uri)
-    trg = _rel_inventory(spark, trg_uri)
-    on = ["rel_path", "byte_size"]
-    missing = [r.rel_path for r in src.join(trg, on, "left_anti").collect()]
-    extra = [r.rel_path for r in trg.join(src, on, "left_anti").collect()]
+    """(missing_in_target, only_in_target) as sorted relative paths
+    (reference: getDelta, Delta.scala:40-50). ``spark`` is unused: the
+    diff runs on the driver."""
+    src = _rel_inventory(src_uri)
+    trg = _rel_inventory(trg_uri)
+    missing = sorted(rel for rel, _ in src - trg)
+    extra = sorted(rel for rel, _ in trg - src)
     return missing, extra
 
 

@@ -1,32 +1,12 @@
 """Value types of the filesystem toolkit.
 
 Mirrors the reference's case classes (reference: fs/FsElement.scala:9,
-fs/Paths.scala:8, fs/FsOperationResult.scala:8) — plus DataFrame
-schemas for the inventory representation, since at 100 TB a listing is
-itself a dataset.
+fs/Paths.scala:8, fs/FsOperationResult.scala:8).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
-
-INVENTORY_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("is_dir", BooleanType(), False),
-        StructField("byte_size", LongType(), False),
-    ]
-)
-
-RESULT_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("success", BooleanType(), False),
-    ]
-)
 
 
 @dataclass(frozen=True)
@@ -53,8 +33,3 @@ class FsOperationResult:
     path: str
     success: bool
 
-
-def inventory_df(spark: SparkSession, elements: list[FsElement]) -> DataFrame:
-    """Materialize a listing as the inventory DataFrame."""
-    rows = [(e.path, e.is_dir, e.byte_size) for e in elements]
-    return spark.createDataFrame(rows, INVENTORY_SCHEMA)

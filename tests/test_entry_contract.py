@@ -8,8 +8,10 @@ from __future__ import annotations
 import pytest
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
@@ -49,9 +51,8 @@ def test_registry_matches_survey_declaration():
     in the survey must be registered and vice versa — no silent drift
     in either direction."""
     import re
-    from pathlib import Path
 
-    survey = (Path(__file__).resolve().parent.parent / "SURVEY.md").read_text()
+    survey = (REPO / "SURVEY.md").read_text()
     declared = set(re.findall(r"`(q_[a-z0-9_]+)`", survey))
     registered = set(entrymod.queries())
     assert registered - declared == set(), f"undeclared: {sorted(registered - declared)}"
@@ -104,7 +105,7 @@ def test_registry_order_is_stable_and_fresh_first(tmp_path, monkeypatch):
     import glob as _glob
     import shutil
 
-    for p in _glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for p in _glob.glob(str(REPO / "CORRECTNESS_r*.json")):
         shutil.copy(p, fake_root)
     monkeypatch.setenv("OCTOPUFS_REPO_ROOT", str(fake_root))
     refreshed = list(entrymod.queries())

@@ -6,8 +6,9 @@ array output columns) before a driver round samples them."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from verify_local import schema_kinds  # noqa: E402
 

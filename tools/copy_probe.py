@@ -2,14 +2,15 @@
 (README.md:9: distributed copy ~3x faster than read->write) against
 this rebuild — r7 verdict task #6.
 
-The claim: copying a parquet tree by moving BYTES (one file per Spark
-task, no decode) beats `spark.read.parquet(src).write.parquet(dst)`
-(decompress -> rows -> shuffle-less rewrite -> recompress) because the
-latter burns CPU on codec work and loses the original file layout.
+The claim: copying a parquet tree by moving BYTES (no decode) beats
+`spark.read.parquet(src).write.parquet(dst)` (decompress -> rows ->
+shuffle-less rewrite -> recompress) because the latter burns CPU on
+codec work and loses the original file layout.
 
 The probe generates an N-file parquet tree (default ~2 GB), then
-times: `fs.distributed.copy_folder` at several ``task_count`` settings
-vs the read->write baseline. Prints one JSON line with the ratio.
+times: `fs.distributed.copy_folder` at its default (one task per core
+slot), at one task per file (the reference's layout) and at 8 tasks, vs
+the read->write baseline. Prints one JSON line with the ratio.
 
 Run: python tools/copy_probe.py [total_mb] [n_files]
 Measured numbers live in SCALE.md ("reference 3x copy claim").
@@ -18,12 +19,15 @@ Measured numbers live in SCALE.md ("reference 3x copy claim").
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -35,6 +39,8 @@ from octopufs_spark.session import get_spark  # noqa: E402
 def main() -> None:
     total_mb = int(sys.argv[1]) if len(sys.argv) > 1 else 2048
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    # the copy tasks import octopufs_spark in the executors' Python workers
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
     spark = get_spark("copy_probe")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="copy_probe_")
@@ -87,7 +93,7 @@ def main() -> None:
 
     rw_once(0)  # absorb the writeback spike before anything is timed
     out["read_write_s"] = min(rw_once(1), rw_once(2))
-    for tc in (-1, 32, 8):
+    for tc in (-1, n_files, 8):
         out[f"copy_s_tasks_{tc}"] = min(copy_once(tc, 1), copy_once(tc, 2))
 
     out["ratio_rw_over_copy"] = round(out["read_write_s"] / out["copy_s_tasks_-1"], 2)
